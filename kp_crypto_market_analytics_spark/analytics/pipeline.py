@@ -5,7 +5,15 @@
 window-op DAG; ``analytics_fanout`` mirrors the main() fan-out — one
 persisted feature frame feeding N branched aggregations (the
 reference "caches" by holding the pandas frame in RAM; here an
-explicit persist before the branch point, SURVEY §4)."""
+explicit persist before the branch point, SURVEY §4).
+
+At artifact scale the fan-out is priced by Spark job dispatch, not by
+compute: every artifact is a few-row aggregate whose jobs run one task
+each.  So the fan-out computes each artifact exactly once, as an eager
+local checkpoint, and launches the seven independent checkpoint jobs
+from concurrent threads so their scheduling latency overlaps.
+Every sink downstream (CSV write, figure read) then scans a few
+materialised rows instead of re-running the aggregate."""
 
 from __future__ import annotations
 
@@ -61,12 +69,10 @@ def add_features(candles: DataFrame) -> DataFrame:
     return df.withColumn("anomaly_score", anomaly_score("abs_ret_z", "log_volume_z"))
 
 
-def analytics_fanout(features: DataFrame) -> dict[str, DataFrame]:
-    """The main() fan-out (binance_analysis.py:590-728): all artifact
-    tables branched off ONE persisted feature frame.  Callers own
-    unpersist()."""
-    features.persist(StorageLevel.MEMORY_AND_DISK)
-    out = {
+def artifact_frames(features: DataFrame) -> dict[str, DataFrame]:
+    """The main() fan-out (binance_analysis.py:590-728) as lazy frames:
+    every artifact table branched off ``features``."""
+    return {
         "daily": daily_summary(features, "open_time", "typical_price"),
         "monthly": monthly_rollup(
             daily_summary(features, "open_time", "volume")
@@ -81,4 +87,30 @@ def analytics_fanout(features: DataFrame) -> dict[str, DataFrame]:
             F.col("anomaly_score").desc(), "symbol", "open_time"
         ).limit(200),
     }
-    return out
+
+
+def analytics_fanout(features: DataFrame) -> dict[str, DataFrame]:
+    """Compute every ``artifact_frames`` table once, off ONE persisted
+    feature frame.
+
+    ``features`` is persisted and materialised by one job; the artifacts
+    then come back as eager local checkpoints, built concurrently
+    (``session.run_concurrently``): each is a handful of tiny jobs, so
+    running them side by side overlaps their dispatch latency.  Rows and
+    row order equal the lazy frames', so a CSV write becomes one
+    single-task job and a figure read one job with no shuffle.  The
+    caller's job group and local properties reach every job.
+
+    The caller owns ``features.unpersist()``; the checkpoint blocks are
+    released by Spark's ContextCleaner once the returned frames are
+    dropped."""
+    from kp_crypto_market_analytics_spark.session import run_concurrently
+
+    features.persist(StorageLevel.MEMORY_AND_DISK)
+    features.count()
+    lazy = artifact_frames(features)
+    done = run_concurrently(
+        features.sparkSession,
+        [lambda df=df: df.localCheckpoint(eager=True) for df in lazy.values()],
+    )
+    return dict(zip(lazy, done))

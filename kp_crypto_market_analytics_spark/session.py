@@ -124,6 +124,31 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     return df
 
 
+def run_concurrently(spark: SparkSession, tasks: list):
+    """Run zero-argument callables, one thread each, and return
+    their results in task order.
+
+    Spark schedules jobs submitted from different threads side by
+    side, so independent small jobs overlap their dispatch latency
+    instead of queueing behind each other.  Each task is wrapped with
+    ``inheritable_thread_target``: the caller's job group, description,
+    tags and other local properties reach every job, so per-group
+    status tracking and cancel-by-group still cover all of them.  Waits
+    for every task, then re-raises the first failure in task order."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    if not tasks:
+        return []
+    wrap = inheritable_thread_target(spark)
+    if wrap is spark:  # pinned-thread mode off: one JVM thread, nothing to copy
+        wrap = lambda task: task  # noqa: E731
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = [pool.submit(wrap(task)) for task in tasks]
+    return [f.result() for f in futures]
+
+
 def _read_parquet_ns_safe(spark: SparkSession, path: str):
     """Read parquet tolerating TIMESTAMP(NANOS) columns.
 

@@ -385,7 +385,8 @@ def write_figures(
     analytics artifact frames (the same dict ``analytics_fanout``
     returns), mirroring the reference dashboard's panels.  Unknown or
     missing keys are skipped — figures are additive to the CSV
-    artifacts, never a gate.
+    artifacts, never a gate.  Returns the written PNG paths in panel
+    order.
 
     ``features``: the raw per-minute feature frame (``add_features``
     output).  When provided, the four raw-frame panels the reference
@@ -394,25 +395,33 @@ def write_figures(
     anomaly dots + vol-vs-volume scatter), completing the reference's
     figure set 1:1.  The focus symbol is the alphabetically first (the
     deterministic stand-in for the reference's configured primary
-    pair)."""
+    pair); it and the thinned focus series are resolved first, serially.
+
+    The panels are independent, and each costs a few tiny Spark jobs
+    plus Python-side rasterising, so all of them render concurrently
+    (``session.run_concurrently``: the caller's job group reaches every
+    job; the first failure is re-raised once every panel has finished).
+    Each PNG is byte-identical to a serial render."""
     import os
+    from functools import partial
+
+    from kp_crypto_market_analytics_spark.session import run_concurrently
 
     os.makedirs(out_dir, exist_ok=True)
-    written = []
-
-    def out(name: str) -> str:
-        p = os.path.join(out_dir, name)
-        written.append(p)
-        return p
+    panels = []  # (file name, render taking path=), in return order
 
     if "daily" in artifacts:  # price panel (binance_analysis.py:251-268)
         d = artifacts["daily"]
         scol = "symbol" if "symbol" in d.columns else None
-        line_chart(d, "date", "avg_value", series=scol, path=out("daily_avg.png"))
+        panels.append(("daily_avg.png", partial(line_chart, d, "date", "avg_value", series=scol)))
     if "monthly" in artifacts:  # volume panel
-        bar_chart(artifacts["monthly"], "month", "volume", path=out("monthly_volume.png"))
+        panels.append(
+            ("monthly_volume.png", partial(bar_chart, artifacts["monthly"], "month", "volume"))
+        )
     if "dow" in artifacts:  # weekday profile (dow_key keeps Mon..Sun order)
-        bar_chart(artifacts["dow"], "dow_key", "avg_value", path=out("dow_profile.png"))
+        panels.append(
+            ("dow_profile.png", partial(bar_chart, artifacts["dow"], "dow_key", "avg_value"))
+        )
     if "heatmap" in artifacts:  # weekday×hour activity (app.py heatmap)
         d = artifacts["heatmap"]
         hours = [c for c in d.columns if c.startswith("h") and c[1:].isdigit()]
@@ -421,11 +430,11 @@ def write_figures(
             long = d.selectExpr(
                 "dow_key", f"stack({len(hours)}, {stack}) AS (hour, v)"
             )
-            heatmap(long, "dow_key", "hour", "v", path=out("activity_heatmap.png"))
+            panels.append(("activity_heatmap.png", partial(heatmap, long, "dow_key", "hour", "v")))
     if "correlation" in artifacts:  # correlation matrix (:700-721)
         d = artifacts["correlation"]
         if {"key_a", "key_b", "corr"} <= set(d.columns):
-            heatmap(d, "key_a", "key_b", "corr", path=out("correlation.png"))
+            panels.append(("correlation.png", partial(heatmap, d, "key_a", "key_b", "corr")))
     if features is not None:  # raw-frame panels (:251-284, :701-721)
         from pyspark.sql import functions as F
 
@@ -437,29 +446,32 @@ def write_figures(
             # gate" — without this, >100k minutes per symbol (~70 days
             # of 1m candles) would trip the chart row caps and crash
             # the CLI after the CSV artifacts were already written.
-            dthin = thin_evenly(d, "open_time", cap=100_000)
-            line_chart_dual(
-                dthin, "open_time", "close", "vol_60m",
-                path=out("price_and_vol.png"),
+            # One thinning serves both series panels.
+            dthin = thin_evenly(
+                d.select("open_time", "close", "vol_60m", "abs_ret"), "open_time", cap=100_000
             )
-            hist_chart(d, "log_ret", bins=200, path=out("returns_hist.png"))
             top = d.orderBy(F.col("anomaly_score").desc(), "open_time").limit(200)
-            scatter_chart(
-                top,
-                "open_time",
-                "abs_ret",
-                base=thin_evenly(
-                    d.select("open_time", "abs_ret"), "open_time", cap=100_000
-                ),
-                path=out("anomalies_absret.png"),
-            )
             # Deterministic 5000-row sample (the reference's seeded
             # .sample): hash-ordered limit, stable across partitionings.
             samp = d.orderBy(F.xxhash64("open_time"), "open_time").limit(5000)
-            scatter_chart(
-                samp,
-                "log_volume",
-                "abs_ret",
-                path=out("vol_vs_volume_scatter.png"),
-            )
+            panels += [
+                ("price_and_vol.png", partial(
+                    line_chart_dual, dthin, "open_time", "close", "vol_60m",
+                )),
+                ("returns_hist.png", partial(hist_chart, d, "log_ret", bins=200)),
+                ("anomalies_absret.png", partial(
+                    scatter_chart, top, "open_time", "abs_ret",
+                    base=dthin.select("open_time", "abs_ret"),
+                )),
+                ("vol_vs_volume_scatter.png", partial(
+                    scatter_chart, samp, "log_volume", "abs_ret",
+                )),
+            ]
+    written = [os.path.join(out_dir, name) for name, _ in panels]
+    if panels:
+        anchor = features if features is not None else next(iter(artifacts.values()))
+        run_concurrently(
+            anchor.sparkSession,
+            [partial(render, path=p) for (_, render), p in zip(panels, written)],
+        )
     return written

@@ -101,6 +101,161 @@ def test_fanout_artifact_shapes(spark, tmp_path):
     feats.unpersist()
 
 
+def _drain(sc) -> None:
+    """Block until the listener bus has delivered every job event, so
+    the status tracker holds every finished job."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _jobs_in_group(sc, tag: str) -> set[int]:
+    _drain(sc)
+    return set(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def _latest_job_id(sc) -> int:
+    """Id of a fresh ungrouped marker job; job ids are sequential, so
+    ids between two markers are exactly the jobs launched in between."""
+    sc.parallelize([0], 1).count()
+    _drain(sc)
+    return max(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def _clear_job_group(sc) -> None:
+    for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
+def test_run_concurrently_waits_then_reraises_first_failure(spark):
+    import time
+
+    import pytest
+
+    from kp_crypto_market_analytics_spark.session import run_concurrently
+
+    finished = []
+
+    def slow(i):
+        def task():
+            time.sleep(0.2)
+            finished.append(i)
+            return i
+        return task
+
+    def boom(msg):
+        def task():
+            raise ValueError(msg)
+        return task
+
+    assert run_concurrently(spark, []) == []
+    assert run_concurrently(spark, [slow(0), lambda: "x", slow(2)]) == [0, "x", 2]
+    finished.clear()
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently(spark, [slow(0), boom("first"), slow(2), boom("second")])
+    # Every task ran to the end before the failure surfaced.
+    assert sorted(finished) == [0, 2]
+
+
+def test_fanout_and_figures_jobs_stay_in_caller_job_group(spark, tmp_path):
+    # Per-op trace attribution and cancel-by-group rely on every job the
+    # fan-out and the figure set launch — including those submitted from
+    # their worker threads — carrying the caller's job group.
+    from kp_crypto_market_analytics_spark.analytics.pipeline import (
+        add_features,
+        analytics_fanout,
+    )
+    from kp_crypto_market_analytics_spark.sinks.figures import write_figures
+
+    sc = spark.sparkContext
+    tag = "test-fanout-job-group"
+    feats = add_features(spark.createDataFrame(_synthetic_candles()))
+    first = _latest_job_id(sc)
+    sc.setJobGroup(tag, "analytics fan-out + figures")
+    try:
+        arts = analytics_fanout(feats)
+        write_figures(arts, str(tmp_path / "figs"), features=feats)
+    finally:
+        _clear_job_group(sc)
+        feats.unpersist()
+    last = _latest_job_id(sc)
+    launched = set(range(first + 1, last))
+    assert launched, "no jobs launched"
+    assert _jobs_in_group(sc, tag) == launched
+
+
+def test_fanout_checkpoints_match_lazy_aggregates(spark, tmp_path):
+    # Each checkpointed artifact holds the same rows, in the same order,
+    # as its aggregate built lazily on the persisted features, and its
+    # CSV artifact is byte-identical.
+    import glob
+
+    from kp_crypto_market_analytics_spark.analytics.pipeline import (
+        add_features,
+        analytics_fanout,
+        artifact_frames,
+    )
+    from kp_crypto_market_analytics_spark.sinks.artifacts import write_csv_artifact
+
+    def csv_bytes(path: str) -> bytes:
+        (part,) = glob.glob(path + "/part-*.csv")
+        with open(part, "rb") as f:
+            return f.read()
+
+    feats = add_features(spark.createDataFrame(_synthetic_candles()))
+    try:
+        arts = analytics_fanout(feats)
+        lazy = artifact_frames(feats)
+        assert list(arts) == list(lazy)
+        for key, df in arts.items():
+            assert df.collect() == lazy[key].collect(), key
+            write_csv_artifact(df, str(tmp_path / "ckpt" / key))
+            write_csv_artifact(lazy[key], str(tmp_path / "lazy" / key))
+            assert csv_bytes(str(tmp_path / "ckpt" / key)) == csv_bytes(
+                str(tmp_path / "lazy" / key)
+            ), key
+    finally:
+        feats.unpersist()
+
+
+# Spark jobs one write_figures call launches on _synthetic_candles(): the
+# focus-symbol lookup and the thinning count, then one per panel read —
+# each aggregate artifact read is a single scan of its checkpoint —
+# except the histogram (three: its min/max, then the two stages of its
+# bin counts) and the anomaly scatter (two: dots and base line).  A
+# structural count: it does not depend on timing or core count.
+WRITE_FIGURES_JOBS = 14
+
+
+def test_fanout_sink_job_counts_are_pinned(spark, tmp_path):
+    # ROADMAP direction 2: job counts do not drift, wall time does.  A
+    # change that makes a sink re-run an artifact's aggregate, or adds a
+    # figure job, fails here whatever the machine's speed.
+    from kp_crypto_market_analytics_spark.analytics.pipeline import (
+        add_features,
+        analytics_fanout,
+    )
+    from kp_crypto_market_analytics_spark.sinks.artifacts import write_csv_artifact
+    from kp_crypto_market_analytics_spark.sinks.figures import write_figures
+
+    sc = spark.sparkContext
+    feats = add_features(spark.createDataFrame(_synthetic_candles()))
+    try:
+        arts = analytics_fanout(feats)
+        counts = {}
+        for key, df in arts.items():
+            tag = f"test-jobcount-csv-{key}"
+            sc.setJobGroup(tag, "write_csv_artifact")
+            write_csv_artifact(df, str(tmp_path / key))
+            counts[key] = len(_jobs_in_group(sc, tag))
+        sc.setJobGroup("test-jobcount-figures", "write_figures")
+        write_figures(arts, str(tmp_path / "figs"), features=feats)
+        figure_jobs = len(_jobs_in_group(sc, "test-jobcount-figures"))
+    finally:
+        _clear_job_group(sc)
+        feats.unpersist()
+    assert counts == dict.fromkeys(arts, 1)
+    assert figure_jobs == WRITE_FIGURES_JOBS
+
+
 def test_funnel_strict_ordering_semantics(spark, tmp_path):
     # A click BEFORE the user's first view must not qualify; a purchase
     # only counts after a qualifying click.  Planted fixture exercises
