@@ -11,20 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# ---------------------------------------------------------------- F1: time
-
-
-def ms_to_timestamp(col: Column | str) -> Column:
-    """Epoch-milliseconds → UTC timestamp.
-
-    Reference: src/collectors/prices_collector.py:9-11 (ms→ISO string).
-    """
-    return F.timestamp_millis(F.col(col).cast("long") if isinstance(col, str) else col.cast("long"))
-
-
-def timestamp_to_ms(col: Column | str) -> Column:
-    """Inverse of :func:`ms_to_timestamp` (src/binance/api.py:19-22)."""
-    return F.unix_millis(F.col(col) if isinstance(col, str) else col)
+# ---------------------------------------------------------------- F2: time
 
 
 def heuristic_time_parse(col: Column | str) -> Column:
@@ -52,11 +39,6 @@ def heuristic_time_parse(col: Column | str) -> Column:
 def typical_price(high: str = "high", low: str = "low", close: str = "close") -> Column:
     """F3 — (high+low+close)/3 (binance_analysis.py:218)."""
     return (F.col(high) + F.col(low) + F.col(close)) / F.lit(3.0)
-
-
-def ohlc4(o: str = "open", h: str = "high", l: str = "low", c: str = "close") -> Column:
-    """F4 — (open+high+low+close)/4 (metrics.py:18)."""
-    return (F.col(o) + F.col(h) + F.col(l) + F.col(c)) / F.lit(4.0)
 
 
 def notional(price: str = "price", qty: str = "qty") -> Column:
@@ -120,11 +102,6 @@ def weekday_name(ts: str) -> Column:
 def weekday_sort_key(ts: str) -> Column:
     """Monday=0 .. Sunday=6 (Spark dayofweek: Sunday=1)."""
     return (F.dayofweek(F.col(ts)) + 5) % 7
-
-
-def month_key(ts: str) -> Column:
-    """'YYYY-MM' period key (binance_analysis.py:669-670)."""
-    return F.date_format(F.col(ts), "yyyy-MM")
 
 
 def minute_bucket(ts: str) -> Column:

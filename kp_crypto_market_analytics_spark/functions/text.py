@@ -50,18 +50,6 @@ def token_count(text: Column | str) -> Column:
     )
 
 
-def word_token_count_bpe_ish(text: Column | str) -> Column:
-    """Token count under a BPE-ish regex: words, numbers, or single
-    non-space symbols — approximates subword tokenizer pre-splitting."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.size(
-        F.filter(
-            F.split(c, r"(?<=\W)|(?=\W)"),
-            lambda t: F.trim(t) != "",
-        )
-    )
-
-
 def stopword_hits(text: Column | str, words: list[str] | None = None) -> Column:
     """Total occurrences of stopwords as space-delimited tokens."""
     c = F.col(text) if isinstance(text, str) else text

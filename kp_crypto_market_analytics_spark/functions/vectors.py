@@ -1,16 +1,15 @@
 """Vector math over ``array<float>`` embedding columns.
 
 Pure Catalyst expressions — the dot product and norms run JVM-side
-with no Python round-trip.  Two tiers:
-
-- ``dot``/``norm``/``cosine`` (variable dim): F.aggregate folds.
-  Spark evaluates higher-order functions INTERPRETED, outside
-  whole-stage codegen — fine off the hot path.
-- ``dot_unrolled``/``norm_unrolled``/``cosine_unrolled`` (fixed dim):
-  explicit 64-term arithmetic, fully codegen'd — measured ~20× faster
-  in all-pairs scoring.  Accumulation order is the identical
-  left-to-right fold, so results are bit-for-bit equal to the
-  aggregate form (and to a sequential SQL list reduction).
+with no Python round-trip.  ``dot``/``norm``/``cosine`` are
+higher-order-function folds (``F.aggregate`` over ``F.zip_with``):
+accumulation is left to right, so results are bit-for-bit equal to a
+sequential SQL list reduction, and the expression tree stays the same
+size whatever the dimension.  Spark evaluates these folds outside
+whole-stage codegen.  An explicitly unrolled 64-term sum was measured
+slower, not faster: its ~3·dim-node tree stalled codegen (janino
+compile seconds per stage), and ivf_topk at sf0.1 took 12 s unrolled
+against 2 s with the fold.
 
 For very wide vectors, batched numpy via Pandas UDF wins — but beware
 np.dot's pairwise/SIMD summation ORDER differs, which can flip rounded
@@ -49,28 +48,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb))
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Explicit left-associated Σ aᵢbᵢ, same IEEE accumulation order as
-    :func:`dot`.  MEASURED PESSIMIZATION at dim=64: the ~3·dim-node
-    expression tree blows up whole-stage codegen (janino compile seconds
-    per stage; interpreted fallback is slow per-row too) — ivf_topk at
-    sf0.1 was 12s unrolled vs 2s with the HOF :func:`dot`.  Kept only
-    for tiny fixed dims (≤8) and as the parity reference."""
-    expr = F.lit(0.0)
-    for i in range(1, dim + 1):
-        expr = expr + F.element_at(a, i) * F.element_at(b, i)
-    return expr
-
-
-def norm_unrolled(a: Column, dim: int) -> Column:
-    """See :func:`dot_unrolled` — prefer :func:`norm` beyond tiny dims."""
-    expr = F.lit(0.0)
-    for i in range(1, dim + 1):
-        v = F.element_at(a, i)
-        expr = expr + v * v
-    return F.sqrt(expr)
-
-
 def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine from precomputed norms — in pair-scoring plans compute
     each side's norm ONCE per vector (narrow, pre-join) instead of per
@@ -95,13 +72,3 @@ def quantize_symmetric(a: Column, scale: Column) -> Column:
 
 def dequantize(q: Column, scale: Column) -> Column:
     return F.transform(q, lambda x: x * scale)
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

@@ -13,7 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kp_crypto_market_analytics_spark.functions.market import (
-    month_key,
     weekday_name,
     weekday_sort_key,
 )
@@ -113,24 +112,6 @@ def exact_stddev_samp(col: str | Column) -> Column:
     sx = F.sum(c.cast(DEC)).cast("double")
     sx2 = F.sum(c.cast(DEC) * c.cast(DEC)).cast("double")
     return F.when(n > 1, F.sqrt((sx2 - sx * sx / n) / (n - F.lit(1))))
-
-
-def symbol_metrics(df: DataFrame, symbol_col: str, price_cols: tuple[str, str, str, str],
-                   volume_col: str, trades_col: str) -> DataFrame:
-    """A1 — per-symbol market metrics (reference src/analytics/metrics.py:15-24):
-    AVG(ohlc4), STDDEV(close), SUM(volume), SUM(num_trades), rounded."""
-    o, h, l, c = price_cols
-    ohlc4 = (F.col(o) + F.col(h) + F.col(l) + F.col(c)) / F.lit(4.0)
-    return (
-        df.groupBy(symbol_col)
-        .agg(
-            F.round(F.avg(ohlc4), 2).alias("avg_price"),
-            F.round(F.stddev_samp(c), 2).alias("volatility"),
-            F.round(exact_sum(volume_col), 2).alias("total_volume"),
-            F.sum(trades_col).alias("total_trades"),
-        )
-        .orderBy(symbol_col)
-    )
 
 
 def daily_summary(df: DataFrame, ts: str, value: str, extra: dict[str, Column] | None = None) -> DataFrame:

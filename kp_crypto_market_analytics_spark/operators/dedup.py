@@ -20,7 +20,7 @@ results are engine-reproducible; swap F.xxhash64 for raw speed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kp_crypto_market_analytics_spark.functions.text import (
@@ -1123,8 +1123,6 @@ def connected_component_labels(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iters: int = 10,
-    strict: bool = True,
-    pointer_jump: bool = False,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph: every node gets
     the MIN node id of its component — the canonical "cluster then keep
@@ -1141,9 +1139,11 @@ def connected_component_labels(
 
     If labels are still changing after ``max_iters`` rounds (component
     diameter > max_iters, e.g. a chain-shaped duplicate family), the
-    labels are WRONG — ``strict=True`` (default) raises rather than
-    returning them silently; ``strict=False`` returns the partial
-    labels for callers that cap rounds deliberately."""
+    labels are WRONG, so this raises ``RuntimeError`` rather than
+    returning them.  Rounds grow with the diameter: the graphs this
+    engine labels are shallow (diameter <= ~8 measured at sf0.1), and a
+    pointer-jumping half-step measured slower on g_wcc's graph (4.3s
+    against 3.7s)."""
     # Iterative algorithms MUST truncate lineage per round.  persist()
     # alone caches DATA but the logical plan still references the prior
     # round's labels TWICE (neighbor join + left join), so the plan tree
@@ -1179,9 +1179,9 @@ def connected_component_labels(
             .agg(F.min("label").alias("nbr_label"))
         )
         # The changed flag rides along in the SAME pass (final label <
-        # old label ⟺ a neighbor or the pointer improved it), so the
-        # convergence count is a cheap scan of the checkpointed frame
-        # instead of an extra old-vs-new join per round.
+        # old label ⟺ a neighbor improved it), so the convergence count
+        # is a cheap scan of the checkpointed frame instead of an extra
+        # old-vs-new join per round.
         half = (
             labels.join(neighbor_min, labels["node"] == F.col("node2"), "left")
             .select(
@@ -1193,46 +1193,16 @@ def connected_component_labels(
                 F.col("label").alias("__old"),
             )
         )
-        if pointer_jump:
-            # Optional pointer-jumping second half-step (the classic
-            # Shiloach-Vishkin shortcut): label := min(label,
-            # label[label]).  Every label value IS a node id present
-            # in the label table, so the lookup is a self-join; reach
-            # roughly doubles per round, collapsing O(diameter) rounds
-            # to O(log diameter) at the cost of one extra join per
-            # round — same fixpoint, bit-identical labeling.  Off by
-            # default: the near-dup / co-purchase graphs this engine
-            # labels are shallow (diameter <= ~8 measured at sf0.1),
-            # where the per-round join overhead exceeds the one round
-            # saved (A/B measured 3.7s vs 4.3s on g_wcc's graph);
-            # enable for deep chain-shaped graphs.
-            ptr = half.select(
-                F.col("node").alias("__pn"), F.col("label").alias("__pl")
-            )
-            new_label = F.least(
-                F.col("label"),
-                F.coalesce(F.col("__pl"), F.col("label")),
-            )
-            stepped = (
-                half.join(ptr, half["label"] == F.col("__pn"), "left")
-                .select(
-                    "node",
-                    new_label.alias("label"),
-                    (new_label < F.col("__old")).alias("__chg"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        else:
-            stepped = half.select(
-                "node",
-                "label",
-                (F.col("label") < F.col("__old")).alias("__chg"),
-            ).localCheckpoint(eager=True)
+        stepped = half.select(
+            "node",
+            "label",
+            (F.col("label") < F.col("__old")).alias("__chg"),
+        ).localCheckpoint(eager=True)
         changed = stepped.where(F.col("__chg")).count()
         labels = stepped.drop("__chg")
         if changed == 0:
             break
-    if changed != 0 and strict:
+    if changed != 0:
         raise RuntimeError(
             f"connected_component_labels did not converge in {max_iters} rounds "
             f"({changed} labels still changing) — component diameter exceeds "

@@ -1196,12 +1196,11 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (JVM-side), per-query top-k on the ROUNDED score so ordering agrees
     with the oracle bit-for-bit.
 
-    r12 A/B note: the blocked NumPy kernel
-    (brute_force_topk_blocked, bit-parity-tested) was measured warm in
-    one session alternating variants at |q|∈{10,100,200}: HOF
-    0.57-1.3s vs blocked 0.69-1.4s — at ≤400k dots the Python
-    boundary costs more than the JVM HOF saves, so the join form
-    stays (guide §1.3: at the floor, stop)."""
+    r12 A/B note: a bit-identical blocked NumPy scoring kernel was
+    measured warm in one session alternating variants at
+    |q|∈{10,100,200}: HOF 0.57-1.3s vs blocked 0.69-1.4s — at ≤400k
+    dots the Python boundary costs more than the JVM HOF saves, so the
+    join form stays (guide §1.3: at the floor, stop)."""
     from kp_crypto_market_analytics_spark.operators.similarity import brute_force_topk
 
     t = load_tables(spark, sf_dir, ["embeddings"])

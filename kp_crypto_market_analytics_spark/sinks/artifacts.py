@@ -1,9 +1,9 @@
-"""Artifact sinks (SURVEY.md §2.1 S15-S16): the CSV/JSON summary files
+"""Artifact sinks (SURVEY.md §2.1 S15-S16): the CSV summary files
 the reference's analytics stage publishes for the dashboard
 (binance_analysis.py:623,652,667,672,684,687; app.py reads them back).
 
 Engine-side the canonical sink is partitioned parquet
-(write_partitioned); CSV/JSON variants exist for dashboard-compat.
+(write_partitioned); CSV variants exist for dashboard-compat.
 Small aggregate tables coalesce to one file (they are KB-sized by
 construction — never do this to a fact table).
 """
@@ -91,11 +91,6 @@ def write_single_csv_file(
         shutil.move(part, path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def write_json_artifact(df: DataFrame, path: str) -> None:
-    """S15 — JSON artifact (one object per line)."""
-    df.coalesce(1).write.mode("overwrite").json(path)
 
 
 def write_orc_artifact(df: DataFrame, path: str, partition_by: str | None = None) -> None:

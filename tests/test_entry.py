@@ -4,7 +4,6 @@ tools/verify_local.py)."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from tests.conftest import SF_DIR
@@ -32,47 +31,34 @@ def test_entry_smoke(spark):
     assert "sum_qty" in df.columns
 
 
-def test_registry_consistency():
+def test_registry_consistency(monkeypatch):
     import __spark_entry__ as m
+    from kp_crypto_market_analytics_spark.queries import QUERIES
 
     qs, oracles = m.queries(), m.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) >= 104
-    # Driver-gate ordering: pending (no green CORRECTNESS row) queries
-    # precede green ones, and within pending, older registrations come
-    # first — the driver's correctness prefix always verifies the
-    # oldest debt first.  Green derives from CORRECTNESS_r*.json on
-    # disk, so this ordering self-updates each round.
-    names = list(qs)
-    green = m._driver_green()
-
-    def tier(n):
-        if n in green:
-            return 1000
-        # stale-green re-queues date from the CHANGE round and rank
-        # just behind never-verified debt of that vintage (mirrors
-        # __spark_entry__._ordered)
-        if n in m._CHANGED_IN_ROUND:
-            return 10 * max(
-                m._FIRST_SEEN_ROUND.get(n, 1), m._CHANGED_IN_ROUND[n]
-            ) + 5
-        return 10 * m._FIRST_SEEN_ROUND.get(n, 1)
-
-    tiers = [tier(n) for n in names]
-    assert tiers == sorted(tiers)
     # Green provenance derives from the on-disk CORRECTNESS artifacts —
     # never hardcode specific names here (they flip as driver rounds
     # land; see test_driver_green_latest_round_wins for the semantics).
-    assert green <= set(qs)
-    # Every name the ordering knows is actually registered.
-    assert set(m._FIRST_SEEN_ROUND) <= set(qs)
-    assert set(m._CHANGED_IN_ROUND) <= set(qs)
+    assert m._driver_green() <= set(qs)
+
+    # Driver-gate ordering on a registry that is not all green: the
+    # pending queries lead in registration order, the rest follow in
+    # registration order.
+    registered = list(QUERIES)
+    pending = [registered[len(registered) // 3], registered[2 * len(registered) // 3]]
+    monkeypatch.setattr(
+        m, "_driver_green", lambda: frozenset(registered) - set(pending)
+    )
+    rest = [n for n in registered if n not in pending]
+    assert list(m.queries()) == pending + rest
+    assert list(m.oracle_sql()) == [n for n in pending + rest if n in m.ORACLES]
 
 
 def test_driver_green_latest_round_wins(tmp_path):
-    # Provenance semantics: a later FAIL re-queues a green query; a
-    # post-change green row clears a _CHANGED_IN_ROUND discount; rows
-    # older than the change never count.
+    # Provenance semantics: the latest round's row decides, so a later
+    # FAIL re-queues a green query.
     import json
 
     import __spark_entry__ as m
@@ -88,7 +74,7 @@ def test_driver_green_latest_round_wins(tmp_path):
     green = m._driver_green(root=str(tmp_path))
     assert "steady" in green            # untouched r01 green row holds
     assert "regressed" not in green     # r02 FAIL supersedes r01 green
-    assert "j_anti_customers" in green  # post-change (round >= 2) green counts
+    assert "j_anti_customers" in green  # r02 green row holds
 
 
 @pytest.mark.parametrize("name", FAST_SUBSET)
@@ -107,47 +93,17 @@ def test_query_matches_oracle(spark, name):
 
 
 def test_driver_prefix_budget_fits():
-    """VERDICT r9 ask #2: the driver's correctness run covers only a
-    ~50-entry registration-order prefix.  Every query still awaiting a
-    fresh green row (never-verified + stale-green re-queues) must fit
-    inside that budget PER SCHEDULED ROUND, or a round's debt silently
-    rides into the next round — the arithmetic must be checked BEFORE
-    landing a wave, so this test fails the moment any one round's
-    pending set outgrows the prefix.
-
-    A wave may be explicitly scheduled into a FUTURE round's prefix
-    (vintage > current round in _FIRST_SEEN_ROUND, e.g. the r11 third
-    wave) — that is declared spillover, not silent debt: the ordering
-    still fronts the oldest vintage, so the driver prefix drains
-    rounds strictly in vintage order."""
-    import collections
-
+    """The driver's correctness run covers only a ~50-entry
+    registration-order prefix.  Every query still awaiting a green row
+    must fit inside it and front the order, or its debt silently rides
+    into the next round."""
     import __spark_entry__ as m
     from kp_crypto_market_analytics_spark.queries import QUERIES
 
     green = m._driver_green()
     ordered = m._ordered(list(QUERIES))
     pending = [n for n in ordered if n not in green]
-    # Per-vintage budget: each scheduled round's pending set must fit
-    # the 50-entry prefix on its own.
-    by_vintage = collections.Counter(
-        max(
-            m._FIRST_SEEN_ROUND.get(n, 1), m._CHANGED_IN_ROUND.get(n, 0)
-        )
-        for n in pending
+    assert len(pending) <= 50, (
+        f"{len(pending)} pending queries exceed the 50-entry driver prefix"
     )
-    for vintage, count in sorted(by_vintage.items()):
-        assert count <= 50, (
-            f"round-{vintage} wave has {count} pending queries — "
-            f"exceeds the 50-entry driver prefix"
-        )
-    # and the pending set must actually FRONT the ordering, oldest
-    # vintage first, so the prefix drains rounds in order.
     assert ordered[: len(pending)] == pending
-    vintages = [
-        max(m._FIRST_SEEN_ROUND.get(n, 1), m._CHANGED_IN_ROUND.get(n, 0))
-        for n in pending
-    ]
-    assert vintages == sorted(vintages), (
-        "pending ordering must be monotone in scheduled vintage"
-    )
